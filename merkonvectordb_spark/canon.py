@@ -1,10 +1,11 @@
 """THE canonicalization for oracle comparisons — single source of truth.
 
 Both the local gate stand-in (``tools/oracle_check.py``) and the
-in-process driver instrumentation (``merkonvectordb_spark/probe.py``)
-hash result sets through these functions.  They exist exactly once so
-the probe's verdicts can never desynchronize from the gate's: a hash
-match reported by one means the same bytes were hashed by the other.
+in-process check behind ``bench.py``'s ``envprobe`` line
+(``merkonvectordb_spark/probe.py``) hash result sets through these
+functions.  They exist exactly once so the bench's verdicts can never
+desynchronize from the gate's: a hash match reported by one means the
+same bytes were hashed by the other.
 """
 
 from __future__ import annotations

@@ -52,6 +52,27 @@ def _row_salt(df: DataFrame, n_salt: int) -> Column:
     )
 
 
+_SCAN_CHAIN_NODES = frozenset({"LogicalRelation", "Filter", "Project", "SubqueryAlias"})
+
+
+def _is_file_scan_chain(df: DataFrame) -> bool:
+    """True iff the analyzed logical plan is one file-scan leaf under
+    only filters and projections — the shapes whose partitioning is the
+    scan's own, so the split arithmetic below describes it.  Joins,
+    unions, aggregates and repartitions all change the partitioning
+    while still reporting the leaves' ``inputFiles()``."""
+    node = df._jdf.queryExecution().analyzed()
+    while True:
+        if node.getClass().getSimpleName() not in _SCAN_CHAIN_NODES:
+            return False
+        children = node.children()
+        if children.size() == 0:
+            return True
+        if children.size() > 1:
+            return False
+        node = children.apply(0)
+
+
 def _estimated_scan_splits(df: DataFrame) -> int | None:
     """Estimate how many scan partitions a FILE-SOURCE frame will plan,
     from driver-side metadata only (file list + sizes + the session's
@@ -62,8 +83,11 @@ def _estimated_scan_splits(df: DataFrame) -> int | None:
     (Σbytes + nFiles·openCost) / minPartitionNum))`` and packing cost
     ``Σ(size + openCost)`` into bins of ``maxSplit``.  Exact bin packing
     differs by ±1 partition — irrelevant for a narrower-than-core-count
-    test.  Returns None for non-file frames (local relations, shuffled
-    inputs), where the caller falls back to the RDD probe."""
+    test.  Returns None unless ``df`` is a file scan under filters and
+    projections only (``_is_file_scan_chain``): local relations, joins,
+    unions and shuffled inputs go to the caller's RDD probe."""
+    if not _is_file_scan_chain(df):
+        return None
     files = df.inputFiles()
     if not files:
         return None

@@ -1,42 +1,30 @@
-"""Driver-environment probe (round-5 instrumentation).
+"""Environment fingerprint and in-process oracle check for ``bench.py``.
 
-Rounds 2-4 left a class of oracle hash failures that pass locally under
-every constructible session but fail in the external harness's container
-(VERDICT r4 "What's wrong" #1).  The harness environment is not
-inspectable from here, so this module makes the *driver's own runs*
-report it back through two channels:
-
-* ``ENVPROBE.jsonl`` (repo root) — appended during any run that calls
-  ``load_table`` (t1 smoke, t2 correctness, bench): one environment
-  fingerprint per process, plus — for the watchlisted queries at the
-  correctness SF — an IN-PROCESS Spark-vs-DuckDB comparison with
-  row-level diff samples.  If the in-process check matches while the
-  driver's own gate reports a hash failure, the divergence is in the
-  harness's comparison layer, not the engines.
-* the bench JSON line (committed per-round as ``BENCH_r{N}.json``) —
-  ``bench.py`` embeds the same fingerprint + in-process check summary,
-  guaranteeing the evidence survives even if the working tree from the
-  t2 run is discarded.
-
-Everything here is wrapped so a probe failure can NEVER fail a query:
-the probe observes, it does not participate.
+``bench.py`` prints an ``envprobe`` line after its timings: the
+environment fingerprint of the correctness SF (``env_fingerprint``) and
+an in-process Spark-vs-DuckDB comparison of a fixed list of queries
+(``inproc_check``), hashed through the same canonicalization as
+``tools/oracle_check.py``.  Both are called explicitly and return dicts;
+nothing here writes files or hooks into the query path.  Failures are
+caught and reported in the result, never raised.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
-PROBE_PATH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "ENVPROBE.jsonl")
+# single source of truth shared with tools/oracle_check.py — the check's
+# verdicts must be byte-identical to the gate stand-in's
+from merkonvectordb_spark.canon import canon_rows as _canon_rows
+from merkonvectordb_spark.canon import canon_rows_arrow as _canon_rows_arrow
 
-# the r4/r5 driver-red queries (the HUGEINT-oracle family, fixed in r6
-# by CASTing every integer aggregate to BIGINT) + the sessionize bisect
-# variants: these get the expensive per-query in-process oracle
-# comparison at the correctness SF (sf0.01); everything else only
-# contributes to the one-shot environment fingerprint.  r6 adds the two
-# r5-NEW reds that had no probe row last round (VERDICT r5 #5).
-WATCHED = {
+# inproc_check's default query list: the queries that once failed the
+# external gate while matching locally (the HUGEINT-oracle family, fixed
+# by CASTing every integer aggregate to BIGINT, and the sessionize
+# bisect variants), plus the ones the external gate first checked in
+# round 7.
+_WATCHED = (
     "events_sessionize",
     "events_sessionize_v_nevents",
     "events_sessionize_v_cents",
@@ -50,8 +38,6 @@ WATCHED = {
     "streaming_sessionize_closed",
     "events_hierarchical_rollup",
     "streaming_sessionize_python",
-    # round-6 session-2 additions: never driver-checked before round 7,
-    # so a first-check red gets immediate both-fetch-path evidence
     "lang_temperature_mix",
     "quality_score_auc",
     "quality_linear_probe",
@@ -64,23 +50,7 @@ WATCHED = {
     "events_ab_test_report",
     "quality_calibration_report",
     "events_ewma_anomalies",
-}
-
-_env_recorded: set[str] = set()
-_probed: set[str] = set()
-
-
-def _enabled() -> bool:
-    """Global kill-switch: ENVPROBE=0 disables EVERY probe path —
-    fingerprints, per-query checks, and file appends alike."""
-    return os.environ.get("ENVPROBE", "1") != "0"
-
-
-def _is_correctness_dir(sf_dir: str) -> bool:
-    """The driver's oracle gate runs at sf0.01 — match the directory
-    NAME exactly (basename), not a substring: '0.01' as a substring
-    also matches paths like .../run-2026.01.12/sf10."""
-    return os.path.basename(os.path.normpath(sf_dir)) == "sf0.01"
+)
 
 
 def _small_enough_to_scan(sf_dir: str) -> bool:
@@ -94,23 +64,10 @@ def _small_enough_to_scan(sf_dir: str) -> bool:
         return False
 
 
-def _append(line: dict) -> None:
-    try:
-        with open(PROBE_PATH, "a") as f:
-            f.write(json.dumps(line, default=str) + "\n")
-    except Exception:
-        pass  # read-only tree in some harness stages — observation only
-
-
-# single source of truth shared with tools/oracle_check.py — the probe's
-# verdicts must be byte-identical to the gate stand-in's
-from merkonvectordb_spark.canon import canon_rows as _canon_rows  # noqa: E402
-from merkonvectordb_spark.canon import canon_rows_arrow as _canon_rows_arrow  # noqa: E402
-
-
 def env_fingerprint(spark, sf_dir: str, heavy: bool | None = None) -> dict:
-    """Environment + data fingerprint.  MUST run before load_table pins
-    session confs so the *harness's own* values are captured.
+    """Environment + data fingerprint: library versions, time zones, the
+    session's timestamp/parquet confs, and the events timestamp type as
+    DuckDB and Spark read it.
 
     ``heavy`` gates the full-table checksum scans (DuckDB + Spark over
     events/lineitem); default: only when the directory is small enough
@@ -206,22 +163,11 @@ def env_fingerprint(spark, sf_dir: str, heavy: bool | None = None) -> dict:
     return fp
 
 
-def record_env_once(spark, sf_dir: str) -> None:
-    """Called at the top of ``load_table`` (before any conf pinning).
-    One fingerprint line per (process, sf_dir); ENVPROBE=0 disables."""
-    if not _enabled() or sf_dir in _env_recorded:
-        return
-    _env_recorded.add(sf_dir)  # even on failure: never retry per call
-    try:
-        _append(env_fingerprint(spark, sf_dir))
-    except Exception:
-        pass
-
-
 def inproc_check(spark, sf_dir: str, names=None) -> dict:
-    """Run each watched query AND its DuckDB oracle in THIS process over
-    ``sf_dir``; return {name: result-dict}.  Mirrors the external gate's
-    comparison (tools/oracle_check.py canonicalization)."""
+    """Run each named query (default: ``_WATCHED``) AND its DuckDB oracle
+    in THIS process over ``sf_dir``; return {name: result-dict}.  Mirrors
+    the external gate's comparison (tools/oracle_check.py
+    canonicalization)."""
     out: dict = {}
     try:
         import duckdb
@@ -239,10 +185,9 @@ def inproc_check(spark, sf_dir: str, names=None) -> dict:
                 con.execute(
                     f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
                 )
-        for name in names or sorted(WATCHED):
+        for name in names or sorted(_WATCHED):
             if name not in qs or name not in oracles:
                 continue
-            _probed.add(name)  # the wrapper hook must not re-run this
             r: dict = {}
             try:
                 sdf = qs[name](spark, sf_dir)
@@ -297,21 +242,3 @@ def inproc_check(spark, sf_dir: str, names=None) -> dict:
     except Exception as e:
         out["__err__"] = repr(e)[:300]
     return out
-
-
-def maybe_probe(name: str, spark, sf_dir: str) -> None:
-    """Per-query hook (registry wrapper): at the correctness SF, run the
-    in-process comparison once per process for this query and append the
-    result to ENVPROBE.jsonl."""
-    if name in _probed or not _is_correctness_dir(sf_dir):
-        return
-    if not _enabled():
-        return
-    _probed.add(name)
-    try:
-        res = inproc_check(spark, sf_dir, names=[name])
-        line = {"kind": "query", "name": name, "wall": time.time()}
-        line.update(res.get(name, {}))
-        _append(line)
-    except Exception:
-        pass

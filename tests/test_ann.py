@@ -118,6 +118,19 @@ def test_ivf_assignment_is_partial_aggregable(clustered):
     assert "partial" in plan.lower()
 
 
+@pytest.mark.parametrize(
+    "n_best, carry",
+    [(0, ()), (3, ("payload",)), (1, ("payload", "cid"))],
+    ids=["n_best_below_1", "carry_needs_n_best_1", "carry_name_collision"],
+)
+def test_ivf_assign_rejects_bad_arguments_on_entry(n_best, carry):
+    from merkonvectordb_spark.operators.ann import ivf_assign
+
+    # no frames at all: the check must fire before any plan is built
+    with pytest.raises(ValueError):
+        ivf_assign(None, None, "vec_id", n_best=n_best, carry=carry)
+
+
 def test_kmeans_refine_improves_quantization(clustered, spark):
     from merkonvectordb_spark.operators.ann import ivf_assign, kmeans_refine
     from merkonvectordb_spark.functions.vector import cosine_similarity

@@ -1,8 +1,9 @@
 """Pin THE oracle-comparison canonicalization (merkonvectordb_spark.canon).
 
 Both verification channels — tools/oracle_check.py (the local gate
-stand-in) and merkonvectordb_spark/probe.py (the in-driver check) —
-hash result sets through these two functions.  A silent behavior change
+stand-in) and the in-process check behind bench.py's ``envprobe`` line
+(merkonvectordb_spark/probe.py) — hash result sets through these two
+functions.  A silent behavior change
 here desynchronizes every oracle verdict at once, so the exact rendering
 rules are pinned, plus the properties the hash-compare relies on
 (column-order and row-order insensitivity, engine-representation

@@ -224,3 +224,25 @@ def test_probe_ledger_parses_and_covers_registry():
     best = ledger_best(path)
     covered = names & (set(best) | set(_PROSE_SLOPES))
     assert covered == names, f"unprobed: {sorted(names - covered)[:10]}"
+
+
+def test_load_table_and_queries_leave_the_repo_tree_alone(spark, sf_dir):
+    """Library code never writes into the repo tree: loading tables and
+    running a registered query (one the retired environment probe used
+    to wrap) leave the tracked ``ENVPROBE.jsonl`` untouched, and
+    ``queries()`` hands out the registered functions themselves."""
+    import os
+
+    from merkonvectordb_spark import registry
+    from merkonvectordb_spark.schema import load_table
+
+    correctness_sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    ledger = os.path.join(_repo_root(), "ENVPROBE.jsonl")
+    before = os.stat(ledger)
+    for sf in (sf_dir, correctness_sf):
+        load_table(spark, sf, "events")
+    qs = entry.queries()
+    qs["events_sessionize"](spark, correctness_sf)
+    after = os.stat(ledger)
+    assert (after.st_size, after.st_mtime_ns) == (before.st_size, before.st_mtime_ns)
+    assert qs["events_sessionize"] is registry._QUERIES["events_sessionize"]

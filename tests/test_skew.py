@@ -94,3 +94,44 @@ def test_spread_small_scan_widens_narrow_frames_only(spark):
     # an already-wide frame passes through UNTOUCHED — the exact same
     # plan object, no exchange added (the 100 TB no-op guarantee)
     assert spread_small_scan(wide) is wide
+
+
+def test_estimated_scan_splits_sizes_scan_chains_only(spark, sf_dir, tmp_path):
+    """The metadata estimate describes a file scan's own splits, so it
+    applies only to scan → filter/project chains; anything that still
+    lists its leaves' files but is partitioned otherwise (join, union)
+    must fall back to the RDD probe (None)."""
+    from merkonvectordb_spark.operators.skew import _estimated_scan_splits
+    from merkonvectordb_spark.schema import load_table
+    from merkonvectordb_spark.sources.vector_store import VectorStore
+
+    store = VectorStore(spark, str(tmp_path / "vs"))
+    recs = spark.createDataFrame(
+        [
+            ("c0", "a", '{"id": "a"}', [1.0, 0.0]),
+            ("c1", "b", '{"id": "b"}', [0.0, 1.0]),
+        ],
+        "collection STRING, key STRING, metadata STRING, embedding ARRAY<FLOAT>",
+    ).withColumn("ts", F.timestamp_micros(F.lit(0)))
+    store.upsert(recs, key_from_metadata=False)
+    vectors = store.vectors()
+    emb = load_table(spark, sf_dir, "embeddings")
+
+    for df in (
+        vectors.join(vectors.select("collection", "key"), ["collection", "key"]),
+        vectors.unionByName(vectors),
+        emb.join(emb.select("vec_id"), "vec_id"),
+    ):
+        assert df.inputFiles()
+        assert _estimated_scan_splits(df) is None
+
+    # the input shapes of today's spread_small_scan call sites
+    call_site_shapes = {
+        "VectorStore.vectors()": vectors,
+        "knn_batch corpus": store.scan("c0").where(
+            F.col("key").isNotNull() & (F.col("key") != "")
+        ),
+        "semantic_dedup select": emb.select(F.col("vec_id"), F.col("embedding")),
+    }
+    for label, df in call_site_shapes.items():
+        assert _estimated_scan_splits(df) is not None, label

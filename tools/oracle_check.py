@@ -23,7 +23,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # single source of truth shared with merkonvectordb_spark/probe.py — the
-# in-process probe's verdicts must be byte-identical to this gate's
+# verdicts on bench.py's ``envprobe`` line must be byte-identical to this
+# gate's
 from merkonvectordb_spark.canon import canon_cell  # noqa: E402
 
 
