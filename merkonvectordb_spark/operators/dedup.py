@@ -33,6 +33,10 @@ _rng = random.Random(2026)
 MINHASH_A = [_rng.randrange(1, MINHASH_P) for _ in range(NUM_HASHES)]
 MINHASH_B = [_rng.randrange(0, MINHASH_P) for _ in range(NUM_HASHES)]
 
+# entries in each Arrow task's shingle/token hash cache; the cache is
+# cleared when full, so a task's memory stays bounded on any vocabulary
+_HASH_CACHE_MAX = 1 << 16
+
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact (normalized-content) dedup groups.
@@ -133,47 +137,33 @@ def lsh_band_keys(sig: Column) -> Column:
     )
 
 
-def shingle_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """``(__id, __sh)`` distinct-shingle table, repartitioned to the full
-    core count first: the hash work is CPU-bound and scan-local, and a
-    compute-heavy-but-byte-light input (one small parquet file) would
-    otherwise run the whole pipeline on its 1-2 scan partitions."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
-        .repartition(par)
-        .select("__id", shingle_set(F.col("__text")).alias("__sh"))
-        .where(F.size("__sh") > 0)
-    )
-
-
 def shingle_analysis(
     df: DataFrame, id_col: str, text_col: str, n: int = SHINGLE_N
 ) -> DataFrame:
-    """``(__id, __sh, __setkey, __sig)`` in ONE vectorized Arrow pass —
-    the fused form of ``shingle_sets`` + the collapse's set keying + the
-    MinHash signature fold, for consumers that need the hashes (banding
-    / collapse / calibration).  ``shingle_sets`` remains the
-    expression-form for hash-free consumers (Jaccard verify).
+    """``(__id, __sh, __setkey, __sig)`` in ONE vectorized Arrow pass:
+    the shingle set, the collapse's set key and the MinHash signature —
+    the one shingle/MinHash form every banding, collapse and Jaccard
+    consumer reads.
 
     Value contract (pinned in ``test_dedup`` and by the oracle): every
     column is bit-for-bit the JVM expression chain —
-    ``__sh = array_distinct(word_shingles(lower-split text))`` in
-    first-occurrence order, ``__setkey = md5(concat_ws('',
-    transform(array_sort(__sh), md5)))``, ``__sig`` the 16-arm
-    ``(a·x + b) mod P`` fold over the md5[:15]-fold base hashes.  The
-    Python mirror is exact on this corpus: ASCII lower == JVM lower,
-    and the split pattern is Java's ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``
-    (NOT Python's Unicode-aware ``\\s``).  Empty shingle sets are
-    dropped, matching ``shingle_sets``'s ``size > 0`` filter.
+    ``__sh = shingle_set(text)`` in first-occurrence order,
+    ``__setkey = md5(concat_ws('', transform(array_sort(__sh), md5)))``,
+    ``__sig`` the 16-arm ``(a·x + b) mod P`` fold over the md5[:15]-fold
+    base hashes.  The JVM lowercases the text before the Arrow crossing
+    (``F.lower``, so no Python case mapping can drift from Spark's);
+    Python only splits on Java's ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]`` (NOT
+    Python's Unicode-aware ``\\s``) and hashes.  Docs below the shingle
+    window (empty sets) are dropped.
 
     Why Arrow here (guide §4 inverted): the JVM chain evaluates ~3
     interpreted higher-order transforms with two md5 calls per shingle
     plus 16 interpreted signature arms; the fused pass hashes each
-    distinct shingle ONCE (per-task cache), folds signatures in one
-    numpy matmul, and crosses the Arrow boundary once per doc batch.
-    Interleaved A/B at sf0.1 (4 pairs, one process): chain front-half
-    median 2.54 s → 2.04 s, every pair in favor."""
+    distinct shingle ONCE (per-task cache, bounded by
+    ``_HASH_CACHE_MAX``), folds signatures in one numpy matmul, and
+    crosses the Arrow boundary once per doc batch.  Interleaved A/B at
+    sf0.1 (4 pairs, one process): chain front-half median 2.54 s →
+    2.04 s, every pair in favor."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     id_type = df.schema[id_col].dataType
@@ -186,7 +176,7 @@ def shingle_analysis(
         ]
     )
     src = df.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__text")
+        F.col(id_col).alias("__id"), F.lower(F.col(text_col)).alias("__text")
     ).repartition(par)
     a_list, b_list, p = list(MINHASH_A), list(MINHASH_B), MINHASH_P
 
@@ -206,9 +196,11 @@ def shingle_analysis(
         for pdf in batches:
             ids, shs, keys, sigs = [], [], [], []
             for i, t in zip(pdf["__id"], pdf["__text"]):
-                toks = [w for w in ws.split((t or "").lower()) if w]
+                toks = [w for w in ws.split(t or "") if w]
                 if len(toks) < n:
-                    continue  # empty set — dropped like shingle_sets
+                    continue  # empty shingle set — dropped
+                if len(cache) >= _HASH_CACHE_MAX:
+                    cache.clear()
                 grams = list(
                     dict.fromkeys(
                         " ".join(toks[j : j + n])
@@ -243,21 +235,11 @@ def shingle_analysis(
 
 
 def band_rows(sets_df: DataFrame) -> DataFrame:
-    """``(__id, band_id, band_key)`` LSH band rows of a shingle-set
-    table — the joinable (and persistable: see
-    ``operators.fingerprint_store``) form of the MinHash index.  A
-    frame carrying a precomputed ``__sig`` (``shingle_analysis``)
-    skips the expression-form signature fold."""
-    if "__sig" in sets_df.columns:
-        sigs = sets_df.select("__id", "__sig")
-    else:
-        sigs = sets_df.select(
-            "__id",
-            minhash_signature(shingle_base_hashes(F.col("__sh"))).alias(
-                "__sig"
-            ),
-        )
-    return sigs.select(
+    """``(__id, band_id, band_key)`` LSH band rows of a
+    ``shingle_analysis`` frame (its ``__sig`` column) — the joinable
+    (and persistable: see ``operators.fingerprint_store``) form of the
+    MinHash index."""
+    return sets_df.select(
         "__id",
         F.posexplode(lsh_band_keys(F.col("__sig"))).alias("band_id", "band_key"),
     )
@@ -269,10 +251,9 @@ def collapse_identical_sets(
     """Identical-shingle-set collapse, exposed for pair-semantics
     consumers (round 9): returns ``(membership, rep_sets)`` where
     ``membership`` is ``(__id, __rep)`` (every doc → min-id holder of
-    its exact set) and ``rep_sets`` is the ``(__id, __sh)`` table
-    restricted to representatives (carrying ``__sig`` through when the
-    input is a ``shingle_analysis`` frame, so banding skips the
-    signature recompute).
+    its exact set) and ``rep_sets`` is the ``(__id, __sh, __sig)``
+    table restricted to representatives.  ``sets_df`` is a
+    ``shingle_analysis`` frame: its ``__setkey`` is the collapse key.
 
     Identical sets have identical MinHash signatures, identical band
     keys, and identical Jaccard against every third set — so banding,
@@ -281,30 +262,15 @@ def collapse_identical_sets(
     identical group costs g membership rows instead of g²/2 candidate
     pairs (the license-boilerplate adversary; the key scheme: md5 over
     the sorted set with each element md5-hashed first, so the
-    fixed-width concatenation is not injectable — ONE copy of it lives
-    here).
+    fixed-width concatenation is not injectable).
 
-    Both returned frames are EAGER localCheckpoints: the keyed frame
-    (shingle sets + set key) is cached once, both outputs materialize
-    through that single cache — the tokenizer and the per-element md5
-    keying run exactly once per input row, instead of once per
-    downstream materialization — and the transient cache is released
-    before returning.  Lineage is cut, so callers may drop any upstream
-    cache immediately and need no checkpoint of their own."""
-    if "__setkey" in sets_df.columns:
-        # shingle_analysis input: the key (and signature) were computed
-        # in the fused Arrow pass — bit-identical scheme, one copy of
-        # which still lives in the expression below for plain
-        # shingle-set frames (tests pin the two forms equal).
-        keyed = sets_df.persist()
-    else:
-        keyed = sets_df.withColumn(
-            "__setkey",
-            F.md5(F.concat_ws("", F.transform(F.array_sort("__sh"), F.md5))),
-        ).persist()
-    rep_cols = ["__id", "__sh"] + (
-        ["__sig"] if "__sig" in sets_df.columns else []
-    )
+    Both returned frames are EAGER localCheckpoints: the input is
+    cached once, both outputs materialize through that single cache —
+    the Arrow shingle pass runs exactly once per input row, instead of
+    once per downstream materialization — and the transient cache is
+    released before returning.  Lineage is cut, so callers may drop any
+    upstream cache immediately and need no checkpoint of their own."""
+    keyed = sets_df.persist()
     try:
         reps = keyed.groupBy("__setkey").agg(F.min("__id").alias("__rep"))
         mem_plan = (
@@ -314,7 +280,7 @@ def collapse_identical_sets(
         )
         rep_plan = (
             keyed.join(reps.select(F.col("__rep").alias("__id")), "__id")
-            .select(*rep_cols)
+            .select("__id", "__sh", "__sig")
         )
         # materialize BOTH eager checkpoints concurrently (guide §2.6
         # overlap independent jobs): they are independent consumers of
@@ -391,10 +357,6 @@ def candidate_pairs_from_sets(
         .select(F.col("l.__id").alias("a"), F.col("r.__id").alias("b"))
         .distinct()
     )
-
-
-def candidate_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return candidate_pairs_from_sets(shingle_analysis(df, id_col, text_col))
 
 
 def leakage_audit(
@@ -619,18 +581,6 @@ def jaccard_edges_from_sets(
     )
 
 
-def jaccard_edges(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-) -> DataFrame:
-    return jaccard_edges_from_sets(
-        shingle_sets(df, id_col, text_col), pairs, threshold
-    )
-
-
 def connected_components(
     edges: DataFrame, max_iter: int = 20, driver_threshold: int = 200_000
 ) -> DataFrame:
@@ -748,11 +698,10 @@ def near_dedup(
     membership = None
     cached = None
     if exact_precollapse:
-        # the collapse itself lives in collapse_identical_sets — ONE
-        # copy of the correctness-critical __setkey scheme (ADVICE
-        # round-9 #4).  The helper materializes membership and the
-        # rep-set table through a SINGLE internal cache (tokenizer and
-        # md5 keying run once) and returns eager checkpoints, so no
+        # collapse_identical_sets groups on the __setkey that
+        # shingle_analysis computed, materializes membership and the
+        # rep-set table through a SINGLE internal cache (the Arrow
+        # shingle pass runs once) and returns eager checkpoints, so no
         # caller-side persist is needed and lineage is already cut for
         # the final expansion join below.
         membership, sets_df = collapse_identical_sets(sets_all)
@@ -806,6 +755,17 @@ NGRAM_N = 15  # chars per gram
 NGRAM_T_NUM, NGRAM_T_DEN = 4, 5  # threshold 0.8 as an exact rational
 
 
+def _ngram_text(text: Column) -> Column:
+    """The char-n-gram normalization — ONE copy, shared by the gram
+    generator and the ``ngram_jaccard_pairs`` text pre-collapse:
+    lowercase, collapse runs of ``[ \\t\\n\\f\\r]`` to one space (the
+    class RE2's ``\\s`` matches in the oracle — NO ``\\x0b``), then trim
+    spaces.  Replace-then-trim order matters: a trim first would leave
+    ``'x\\n'`` as ``'x '``.  Mirrored in the queries_dedup oracle as
+    ``trim(regexp_replace(lower(text), ...))``."""
+    return F.trim(F.regexp_replace(F.lower(text), "[ \t\n\f\r]+", " "))
+
+
 def char_ngram_key_rows(
     df: DataFrame, id_col: str, text_col: str, n: int = NGRAM_N
 ) -> DataFrame:
@@ -823,38 +783,30 @@ def char_ngram_key_rows(
     replaces the n-char string in every downstream shuffle/sort/join.
     Key collisions (p ≈ 2⁻⁶⁰ per pair) would merge two grams in both
     engines identically — the oracle folds the same way.
-    """
-    import re as _re
 
+    The JVM normalizes the text (:func:`_ngram_text`) before the Arrow
+    crossing; Python only cuts and hashes the grams.
+    """
     import pandas as pd
 
     par = df.sparkSession.sparkContext.defaultParallelism
     src = df.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__text")
+        F.col(id_col).alias("__id"),
+        _ngram_text(F.col(text_col)).alias("__text"),
     ).repartition(par)
     # carry the caller's id TYPE through the Arrow pass — a hardcoded
     # LONG would break (or silently coerce) string ids the API accepts
     id_ddl = df.schema[id_col].dataType.simpleString()
 
     def gen(batches):
-        # the EXACT whitespace class RE2's \s matches ([\t\n\f\r ] —
-        # ASCII, no \v), replace-then-strip-spaces order: Python's
-        # unicode .strip()/\s and DuckDB's space-only trim() otherwise
-        # normalize 'x\n' differently ('x' vs 'x ') and the engines'
-        # gram sets silently diverge.  Mirrored in the queries_dedup
-        # oracle as trim(regexp_replace(lower(text), ...)).
-        ws = _re.compile(r"[ \t\n\f\r]+")
         for pdf in batches:
             ids: list = []
             keys: list = []
             sizes: list = []
             for i, t in zip(pdf["__id"], pdf["__text"]):
-                if t is None:
+                if len(t or "") < n:
                     continue
-                tt = ws.sub(" ", t.lower()).strip(" ")
-                if len(tt) < n:
-                    continue
-                gset = {tt[j : j + n] for j in range(len(tt) - n + 1)}
+                gset = {t[j : j + n] for j in range(len(t) - n + 1)}
                 for g in gset:
                     ids.append(i)
                     keys.append(py_md5_hash60(g.encode("utf-8")))
@@ -987,15 +939,9 @@ def ngram_jaccard_pairs(
     membership = None
     src = df
     if exact_precollapse:
-        # EXACTLY the gram generator's normalization ([ \t\n\f\r] — NO
-        # \x0b, matching char_ngram_key_rows and the mirrored oracle;
-        # including \v here once wrongly collapsed docs that differ
-        # only by a vertical tab, emitting a false jaccard=1.0 pair)
-        # plus lowercase + collapse + trim, so the length guard below
-        # equals its `len(tt) < n` skip
-        norm = F.trim(
-            F.regexp_replace(F.lower(F.col(text_col)), "[ \t\n\f\r]+", " ")
-        )
+        # the gram generator's own normalization, so the length guard
+        # below equals its `len < n` skip
+        norm = _ngram_text(F.col(text_col))
         keyed = (
             df.select(
                 F.col(id_col).alias("__id"),
@@ -1173,9 +1119,10 @@ def simhash_fingerprint_rows(
     Computes the EXACT value of the ``simhash_fingerprint`` expression
     (pinned by ``test_dedup``): same 60-bit md5 fold per token
     (``py_md5_hash60`` ≡ ``md5_hash60``), same TF weighting, same
-    bit-majority rule; tokenization mirrors the JVM ``tokenize``
-    (split on Java's ``\\s`` class ``[ \\t\\n\\x0b\\f\\r]``, lowercase,
-    drop empties).  Docs with no tokens are EXCLUDED (they would all
+    bit-majority rule.  The JVM lowercases the text before the Arrow
+    crossing (``F.lower``, as ``tokenize`` does); Python only splits on
+    Java's ``\\s`` class ``[ \\t\\n\\x0b\\f\\r]``, drops empties and
+    hashes.  Docs with no tokens are EXCLUDED (they would all
     fingerprint to 0 and band together) — callers get the
     ``token_count > 0`` filter built in.
 
@@ -1183,8 +1130,9 @@ def simhash_fingerprint_rows(
     ``aggregate``/``zip_with`` chain — CodegenFallback, interpreted per
     (token × bit) = ~2,700 lambda evaluations per doc.  The scale probe
     measured the interpreted path at 97.7 s for 50k docs (sf1); this
-    pass hashes each DISTINCT token once per batch (dict cache) and
-    folds bits as one numpy matrix op per doc."""
+    pass hashes each DISTINCT token once per task (dict cache, bounded
+    by ``_HASH_CACHE_MAX``) and folds bits as one numpy matrix op per
+    doc."""
     import re as _re
 
     import numpy as np
@@ -1193,7 +1141,7 @@ def simhash_fingerprint_rows(
     par = df.sparkSession.sparkContext.defaultParallelism
     id_ddl = df.schema[id_col].dataType.simpleString()
     src = df.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__text")
+        F.col(id_col).alias("__id"), F.lower(F.col(text_col)).alias("__text")
     ).repartition(par)
 
     def gen(batches):
@@ -1206,9 +1154,11 @@ def simhash_fingerprint_rows(
             ids: list = []
             fps: list = []
             for i, t in zip(pdf["__id"], pdf["__text"]):
-                toks = [w for w in ws.split((t or "").lower()) if w]
+                toks = [w for w in ws.split(t or "") if w]
                 if not toks:
                     continue
+                if len(cache) >= _HASH_CACHE_MAX:
+                    cache.clear()
                 hs = np.fromiter(
                     (
                         cache[w]

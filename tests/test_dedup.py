@@ -83,7 +83,7 @@ def test_near_dedup_exact_precollapse_is_equivalent_and_linear(spark):
     from merkonvectordb_spark.operators.dedup import (
         candidate_pairs_from_sets,
         near_dedup,
-        shingle_sets,
+        shingle_analysis,
     )
 
     base = ("the quick brown fox jumps over the lazy dog while spark "
@@ -107,7 +107,7 @@ def test_near_dedup_exact_precollapse_is_equivalent_and_linear(spark):
     assert fast[200] == (200, 1) and fast[300] == (300, 1)
     # the pair stage sees ONE representative for the 40 identical docs:
     # without collapse the mega-group alone contributes 40*39/2 pairs
-    sets_df = shingle_sets(df, "doc_id", "text")
+    sets_df = shingle_analysis(df, "doc_id", "text")
     uncollapsed_pairs = candidate_pairs_from_sets(sets_df).count()
     reps = sets_df.select("__sh").distinct().count()
     assert uncollapsed_pairs >= 40 * 39 // 2
@@ -115,9 +115,14 @@ def test_near_dedup_exact_precollapse_is_equivalent_and_linear(spark):
 
 
 def test_candidate_pairs_not_all_pairs(spark):
-    from merkonvectordb_spark.operators.dedup import candidate_pairs
+    from merkonvectordb_spark.operators.dedup import (
+        candidate_pairs_from_sets,
+        shingle_analysis,
+    )
 
-    df = candidate_pairs(_near_corpus(spark), "doc_id", "text")
+    df = candidate_pairs_from_sets(
+        shingle_analysis(_near_corpus(spark), "doc_id", "text")
+    )
     plan = executed_plan(df)
     # the bucket self-join must be an equi-join on (band_id, band_key),
     # never a cartesian/nested-loop product
@@ -204,6 +209,10 @@ def test_simhash_arrow_path_matches_expression(spark, sf_dir):
             (4, None),        # NULL text  -> excluded
             (5, " \t\r\n "),  # whitespace only -> excluded
             (6, "repeated repeated repeated unique"),  # TF weighting
+            # Spark lower() and Python str.lower() disagree on these
+            (7, "\ua7cbX alpha beta gamma"),
+            (8, "A\u03a3\u1c89 alpha beta gamma"),
+            (9, "\U00010d50x alpha beta gamma"),
         ],
         "doc_id LONG, text STRING",
     )
@@ -218,7 +227,7 @@ def test_simhash_arrow_path_matches_expression(spark, sf_dir):
         for r in simhash_fingerprint_rows(edge, "doc_id", "text").collect()
     }
     assert egot == ewant
-    assert set(egot) == {1, 2, 6}
+    assert set(egot) == {1, 2, 6, 7, 8, 9}
 
 
 def test_shingle_analysis_matches_expression_chain(spark, sf_dir):
@@ -226,23 +235,29 @@ def test_shingle_analysis_matches_expression_chain(spark, sf_dir):
     setkey → MinHash-signature chain (3 interpreted higher-order
     transforms, two md5 calls per shingle, 16 interpreted arms) for ONE
     fused Arrow pass (``shingle_analysis``).  Every column must be
-    VALUE-identical to the expression forms — same shingle lists in
+    VALUE-identical to the JVM expression chain — same shingle lists in
     first-occurrence order, same md5-over-sorted-md5s set key, same
     16-arm prime-field signature — on real fixture text and on
-    whitespace/unicode/edge docs, with empty shingle sets dropped like
-    ``shingle_sets``'s ``size > 0`` filter."""
+    whitespace/unicode/edge docs, with empty shingle sets dropped.  The
+    edge docs include codepoints whose case mapping differs between
+    Spark's ``lower()`` and Python's ``str.lower()`` (U+A7CB, U+1C89
+    after a sigma, U+10D50): the Arrow pass must take the JVM's."""
     from merkonvectordb_spark.operators.dedup import (
         minhash_signature,
         shingle_analysis,
         shingle_base_hashes,
-        shingle_sets,
+        shingle_set,
     )
     from merkonvectordb_spark.schema import load_table
 
     def jvm(df):
         return {
             r["__id"]: (list(r["__sh"]), r["__setkey"], list(r["__sig"]))
-            for r in shingle_sets(df, "doc_id", "text")
+            for r in df.select(
+                F.col("doc_id").alias("__id"),
+                shingle_set(F.col("text")).alias("__sh"),
+            )
+            .where(F.size("__sh") > 0)
             .select(
                 "__id",
                 "__sh",
@@ -274,12 +289,15 @@ def test_shingle_analysis_matches_expression_chain(spark, sf_dir):
             (5, " \t\r\n "),      # whitespace only -> dropped
             (6, "one two"),       # below the shingle window -> dropped
             (7, "a b c a b c a b c d"),  # duplicate shingles collapse
+            (8, "\ua7cbX alpha beta gamma"),
+            (9, "A\u03a3\u1c89 alpha beta gamma"),
+            (10, "\U00010d50x alpha beta gamma"),
         ],
         "doc_id LONG, text STRING",
     )
     ewant, egot = jvm(edge), arrow(edge)
     assert egot == ewant
-    assert set(egot) == {1, 2, 7}
+    assert set(egot) == {1, 2, 7, 8, 9, 10}
 
 
 # ---------------------------------------------------------------------------
@@ -332,10 +350,13 @@ def test_ngram_text_precollapse_is_equivalent(spark):
     gram generation (the identical-mega-group guard).  Output must equal
     the uncollapsed pipeline — cross pairs inherit the rep jaccard,
     within-group pairs emit 1.0, sub-window docs stay pair-less — and
-    normalization-equal (whitespace/case) variants must collapse too."""
+    normalization-equal (whitespace/case) variants must collapse too,
+    including a case pair (U+0264 / U+A7CB) that Spark's lower() maps
+    and Python's str.lower() does not."""
     from merkonvectordb_spark.operators.dedup import ngram_jaccard_pairs
 
     base = "the quick brown fox jumps over the lazy dog again and again"
+    tail = " rams horn letters that differ only in their case"
     rows = (
         [(i, base) for i in range(10)]              # identical group
         + [(50, "THE  quick   brown fox jumps over the lazy dog again "
@@ -343,6 +364,7 @@ def test_ngram_text_precollapse_is_equivalent(spark):
         + [(100, base + " x")]                      # near-dup bridge
         + [(200, "completely different text about spark physical plans")]
         + [(300, "short")]                          # below gram window
+        + [(400, "\u0264" + tail), (401, "\ua7cb" + tail)]  # case pair
     )
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
     fast = {(r.a, r.b): r.jaccard
@@ -359,6 +381,7 @@ def test_ngram_text_precollapse_is_equivalent(spark):
                 assert fast[(x, y)] == 1.0
     assert (0, 100) in fast and fast[(0, 100)] < 1.0  # bridge pair kept
     assert not any(300 in p or 200 in p for p in fast)
+    assert fast[(400, 401)] == 1.0
 
 
 def test_ngram_precollapse_vertical_tab_is_not_whitespace(spark):
@@ -681,7 +704,7 @@ def test_leakage_quarantine_histogram_matches_pair_form(spark):
         candidate_pairs_from_sets,
         jaccard_edges_from_sets,
         leakage_quarantine,
-        shingle_sets,
+        shingle_analysis,
     )
     from merkonvectordb_spark.operators.pipeline import hash_split
 
@@ -705,7 +728,9 @@ def test_leakage_quarantine_histogram_matches_pair_form(spark):
     }
 
     # naive reference: materialize candidate pairs, verify, label, count
-    sets = shingle_sets(df, "doc_id", "text").localCheckpoint(eager=True)
+    sets = shingle_analysis(df, "doc_id", "text").localCheckpoint(
+        eager=True
+    )
     edges = jaccard_edges_from_sets(
         sets, candidate_pairs_from_sets(sets), 0.6
     )
@@ -812,7 +837,7 @@ def test_band_freq_cap_semantics(spark):
         candidate_pairs_from_sets,
         leakage_audit,
         near_dedup,
-        shingle_sets,
+        shingle_analysis,
     )
 
     base = (
@@ -824,7 +849,9 @@ def test_band_freq_cap_semantics(spark):
         rows.append((i, f"{base} extra{i} filler{i}"))
         rows.append((i + 100, f"{base} extra{i} filler{i} tail"))
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    sets = shingle_sets(df, "doc_id", "text").localCheckpoint(eager=True)
+    sets = shingle_analysis(df, "doc_id", "text").localCheckpoint(
+        eager=True
+    )
 
     exact = {(r.a, r.b) for r in candidate_pairs_from_sets(sets).collect()}
     capped = {
